@@ -24,6 +24,22 @@ Each round = one deterministic BSP superstep:
   6. CHECKPOINT— write all state tables under round=K dir, then flip the
                  manifest pointer (atomic resume point).
 
+Flat lineage: the round's multi-consumer stages — the fetch result and
+the expansion output — are materialized ONCE as eager local checkpoints
+(flat LogicalRDD leaves). The checkpoint writes, the sketch-delta
+cogroup and the next frontier are planned against those leaves, so no
+commit job re-plans or re-runs the round's history. Intermediate
+persist()ed frames are dropped as soon as the leaf that consumes them
+exists, and the leaves' blocks are released after the manifest commit
+(or when the round raises), so no round's blocks outlive it.
+
+Recovery: the round is the unit of recovery. Local-checkpoint blocks
+live only on the executor that computed them; a lost block (executor
+loss, eviction) fails the round's next job, the round raises before its
+manifest commit, and ``run(resume=True)`` replays the whole round from
+the last committed manifest. No committed state ever depends on a
+block: everything a later round reads is in the checkpoint directory.
+
 Determinism: no wall clock anywhere in the dataflow (metrics record
 real elapsed time but never feed back into scheduling), so a killed and
 resumed run, or the same run at different parallelism, produces the
@@ -107,6 +123,13 @@ FETCH_SCHEMA = T.StructType(
 )
 
 DOC_TYPE_RANK = SITE.DOC_TYPE_RANK
+
+
+def _unpersist(caches: list[DataFrame]) -> None:
+    """Drop a round's persist()ed frames once nothing reads them."""
+    for c in caches:
+        c.unpersist()
+    caches.clear()
 
 
 @dataclass
@@ -203,7 +226,9 @@ class CrawlEngine:
     # committed round and are filtered out on read (Iceberg's snapshot
     # isolation, minus the catalog).
 
-    LIVE_TABLES = ("frontier", "sketches")
+    # explicit read schemas: inferring them costs one footer-reading job
+    # per table on every resume
+    LIVE_TABLES = {"frontier": FRONTIER_SCHEMA, "sketches": SEEN.SKETCH_SCHEMA}
     LOG_TABLES = ("visit_log", "documents", "metrics", "enqueue_log", "doc_lines")
 
     def _live_dir(self, rnd: int) -> str:
@@ -298,18 +323,23 @@ class CrawlEngine:
     def _read_live(self, rnd: int) -> dict[str, DataFrame]:
         rdir = self._live_dir(rnd)
         return {
-            name: self.spark.read.parquet(os.path.join(rdir, name))
-            for name in self.LIVE_TABLES
+            name: self.spark.read.schema(schema).parquet(os.path.join(rdir, name))
+            for name, schema in self.LIVE_TABLES.items()
         }
 
-    def read_log(self, name: str, upto_round: int, after_round: int = -1) -> DataFrame:
+    def read_log(
+        self, name: str, upto_round: int, after_round: int = -1, schema: str | None = None
+    ) -> DataFrame:
         """Union of a log table's per-round deltas in (after_round,
         upto_round] (orphans from crashed rounds excluded by the r
-        filter)."""
+        filter). ``schema`` (the table's DDL, without ``r``) skips schema
+        inference."""
         base = os.path.join(self.ckpt_dir, "log", name)
+        reader = self.spark.read.option("basePath", base)
+        if schema is not None:
+            reader = reader.schema(schema)  # r is still discovered from the paths
         return (
-            self.spark.read.option("basePath", base)
-            .parquet(base)
+            reader.parquet(base)
             .filter((F.col("r") <= upto_round) & (F.col("r") > after_round))
             .drop("r")
         )
@@ -322,14 +352,18 @@ class CrawlEngine:
         parts = []
         if base_round >= 0:
             parts.append(
-                self.spark.read.parquet(
+                self.spark.read.schema(SEEN.SEEN_URLS_SCHEMA).parquet(
                     os.path.join(self._live_dir(base_round), "seen_base")
                 )
             )
         if upto_round > base_round:
-            parts.append(self.read_log("seen_adds", upto_round, after_round=base_round))
+            parts.append(
+                self.read_log(
+                    "seen_adds", upto_round, after_round=base_round, schema=SEEN.SEEN_URLS_SCHEMA
+                )
+            )
         if not parts:
-            return self.spark.createDataFrame([], "url_hash long, partition_id int")
+            return self.spark.createDataFrame([], SEEN.SEEN_URLS_SCHEMA)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -479,7 +513,16 @@ class CrawlEngine:
             F.col("host"),
             F.pmod(F.col("url_hash"), F.lit(self.cfg.per_host_slots)),
         )
-        return salted.mapInPandas(fetch_batches, FETCH_SCHEMA)
+        # the round's widest fan-out (visit log, documents, doc lines,
+        # metrics, retries, links, the next frontier): one flat leaf
+        return salted.mapInPandas(fetch_batches, FETCH_SCHEMA).localCheckpoint(eager=True)
+
+    @staticmethod
+    def _release(leaf: DataFrame) -> None:
+        """Free a local-checkpoint leaf's blocks. ``DataFrame.unpersist``
+        does not reach them: they belong to the RDD under the leaf's
+        LogicalRDD plan."""
+        leaf._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
     def run(self, resume: bool = True) -> dict:
         """Run rounds until the frontier drains; returns final manifest."""
@@ -501,7 +544,7 @@ class CrawlEngine:
             # measured 26s -> ~12s on the bench-shape replay's pre-round
             # wall (the dominant outside-round term in the decomposition)
             frontier = self.seed_frontier().persist()
-            empty_seen = self.spark.createDataFrame([], "url_hash long, partition_id int")
+            empty_seen = self.spark.createDataFrame([], SEEN.SEEN_URLS_SCHEMA)
             _, sketches = SEEN.add_to_seen(
                 frontier,
                 empty_seen,
@@ -542,6 +585,25 @@ class CrawlEngine:
         return manifest
 
     def _run_round(self, rnd: int, state: dict[str, DataFrame], manifest: dict) -> dict:
+        """One round. Every cache and checkpoint leaf the round creates is
+        released when it returns — after its manifest commit — or raises."""
+        caches: list[DataFrame] = []  # persist()ed intermediates
+        leaves: list[DataFrame] = []  # local-checkpoint leaves
+        try:
+            return self._round(rnd, state, manifest, caches, leaves)
+        finally:
+            _unpersist(caches)
+            for leaf in leaves:
+                self._release(leaf)
+
+    def _round(
+        self,
+        rnd: int,
+        state: dict[str, DataFrame],
+        manifest: dict,
+        caches: list[DataFrame],
+        leaves: list[DataFrame],
+    ) -> dict:
         t0 = time.time()
         sleep0 = self._sleep_acc.value
         decomp: dict = {"_t0": t0}
@@ -572,15 +634,10 @@ class CrawlEngine:
         scheduled = ranked.filter(
             F.col("host_rank") <= F.coalesce(F.col("budget"), F.lit(1))
         ).drop("budget", "host_rank")
-        # three consumers (deferred anti-join, sequencer, fetch input):
+        # two consumers (the sequencer's size check, the fetch input):
         # persist so the rank window runs once per round
         scheduled = scheduled.persist()
-        caches = [scheduled]
-        # deferred = everything not scheduled (rows pruned by the group
-        # limit never materialize a rank — recover them by anti-join)
-        deferred = frontier.join(
-            scheduled.select("url_hash"), "url_hash", "left_anti"
-        )
+        caches.append(scheduled)
 
         # 2. VISIT — canonical global order (SURVEY §4 determinism note).
         # The scheduled set is politeness-bounded (<= sum of host budgets
@@ -596,9 +653,15 @@ class CrawlEngine:
             caches=caches,
         )
 
-        # 3. FETCH
+        # 3. FETCH — the visit sequencing and the fetch run in the fetch
+        # leaf's materialization; the pacing sleep inside it is metered
+        # separately by the accumulator
         t_fetch = time.time()
-        fetched = self._fetch(scheduled).persist()
+        fetched = self._fetch(scheduled)
+        leaves.append(fetched)
+        # the leaf holds every scheduled row: the schedule's caches have
+        # no consumer left
+        _unpersist(caches)
         stats = fetched.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(
@@ -608,10 +671,12 @@ class CrawlEngine:
             ).alias("n_failed"),
         ).collect()[0]
         n_scheduled, n_failed = stats["n"], stats["n_failed"] or 0
-        # schedule + sequence + fetch all materialize in this first
-        # action on the persisted frame; the pacing sleep inside it is
-        # metered separately by the accumulator
         decomp["fetch_stage_wall_ms"] = int((time.time() - t_fetch) * 1000)
+
+        # deferred = everything not scheduled (rows pruned by the group
+        # limit never materialize a rank — recover them by anti-join; the
+        # fetch emits exactly one row per scheduled row)
+        deferred = frontier.join(fetched.select("url_hash"), "url_hash", "left_anti")
 
         visit_rows = fetched.select(
             "visit_seq",
@@ -674,33 +739,29 @@ class CrawlEngine:
 
         # 5. EXPAND — links in canonical discovery order. Doc-map hrefs
         # resolve inline (J7): ItemID -> direct doc URL, title-only ->
-        # portal-search URL (the secondary index), one Catalyst coalesce
+        # portal-search URL (the secondary index), one Catalyst coalesce.
+        # Each link is exploded from its parent's fetched row, which also
+        # carries the parent's depth.
         links = (
             fetched.filter(F.col("status") == 200)
-            .select("visit_seq", F.posexplode_outer("links").alias("pos", "link"))
+            .select("visit_seq", "depth", F.posexplode_outer("links").alias("pos", "link"))
             .filter(F.col("link").isNotNull())
             .select(
                 canonicalize_url(resolve_docmap_link(F.col("link.l_url"))).alias("url"),
                 F.col("link.l_doc_type").alias("doc_type"),
                 F.col("visit_seq").alias("parent_visit_seq"),
                 F.col("link.in_page_pos").alias("in_page_pos"),
+                (F.col("depth") + 1).cast("int").alias("depth"),
             )
             .withColumn("url_hash", F.xxhash64(F.col("url")))
             .withColumn("host", url_host(F.col("url")))
-        )
-        # parent depth +1; join depth from scheduled
-        parent_depth = fetched.select(
-            F.col("visit_seq").alias("parent_visit_seq"), F.col("depth").alias("p_depth")
-        )
-        links = links.join(parent_depth, "parent_visit_seq").withColumn(
-            "depth", (F.col("p_depth") + 1).cast("int")
         )
 
         # robots disallow filter (never enqueued, never seen)
         links = (
             links.join(F.broadcast(self.robots), "host", "left")
             .filter(~F.coalesce(P.is_disallowed(F.col("url"), F.col("disallow")), F.lit(False)))
-            .drop("crawl_delay", "disallow", "p_depth")
+            .drop("crawl_delay", "disallow")
             .withColumn("doc_type_rank", self._rank_col(F.col("doc_type")))
             .withColumn("retry_count", F.lit(0))
             .withColumn("is_new", F.lit(1))
@@ -737,7 +798,7 @@ class CrawlEngine:
             F.sum((F.col("is_new") == 1).cast("long")).alias("n_new"),
         ).collect()[0]
         n_admitted, n_new = astats["n"], astats["n_new"] or 0
-        decomp["expand_wall_ms"] = int((time.time() - t_expand) * 1000)
+        expand_s = time.time() - t_expand
 
         # assign discovery_seq to new links in canonical order — this is
         # the stream that scales with frontier expansion, so it MUST be
@@ -752,9 +813,20 @@ class CrawlEngine:
             caches=caches,
         )
         retry_admits = admitted.filter(F.col("is_new") == 0)
-        admitted_final = new_admits.unionByName(retry_admits).select(
-            [f.name for f in FRONTIER_SCHEMA.fields]
-        ).persist()
+        # four consumers (sketch delta, seen adds, enqueue log, next
+        # frontier): one flat leaf, after which the expansion's caches
+        # (filter_unseen's flagged frame, admitted, the sequencer's
+        # ranged frame) have no consumer left. Its job is expansion work:
+        # timed into expand_wall_ms (the sequencer's own calls stay out)
+        t_expand = time.time()
+        admitted_final = (
+            new_admits.unionByName(retry_admits)
+            .select([f.name for f in FRONTIER_SCHEMA.fields])
+            .localCheckpoint(eager=True)
+        )
+        leaves.append(admitted_final)
+        _unpersist(caches)
+        decomp["expand_wall_ms"] = int((expand_s + time.time() - t_expand) * 1000)
 
         if n_admitted > 0 or n_failed > 0:
             sketches = SEEN.apply_sketch_delta(
@@ -834,13 +906,6 @@ class CrawlEngine:
             # steady state: the seen set's checkpoint cost is O(new URLs)
             deltas["seen_adds"] = new_hashes
         self._write_state(rnd, live, deltas, counters)
-        fetched.unpersist()
-        admitted_final.unpersist()
-        # drop this round's intermediate caches (filter_unseen's flagged
-        # frame, the sequencer's ranged frame, the scheduled set) —
-        # everything live is on disk in the checkpoint at this point
-        for c in caches:
-            c.unpersist()
         return {"round": rnd, **counters}
 
     # ---------------- inspection ----------------

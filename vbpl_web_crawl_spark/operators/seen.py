@@ -44,6 +44,9 @@ SKETCH_SCHEMA = T.StructType(
 )
 
 
+SEEN_URLS_SCHEMA = "url_hash long, partition_id int"
+
+
 def partition_of(url_hash_col, n_partitions: int):
     return F.pmod(url_hash_col, F.lit(n_partitions)).cast("int")
 
